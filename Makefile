@@ -1,10 +1,13 @@
 # One-command cadence targets (VERDICT r5 #7: the cross-SF sweep must
 # rerun every round, not just when remembered).
 
-.PHONY: test sweep bench lint audit all
+.PHONY: test test-etl sweep bench lint audit all
 
 test:           ## default suite: every oracle at sf0.01 + unit/property tests
 	python -m pytest tests/ -q
+
+test-etl:       ## write-path inner loop: sources, pipeline, streaming, versioned store
+	python -m pytest tests/test_sources.py tests/test_pipeline.py tests/test_streaming.py tests/test_versioned.py -q
 
 sweep:          ## cross-SF oracle sweep: every oracle at sf0.001 and sf0.1
 	python -m pytest -m sweep tests/test_sweep.py -q

@@ -293,13 +293,12 @@ def stream_update_history(
     matching the batch job's bookkeeping column.  `wait_secs` forwards
     the reference's WAIT_TIME_BETWEEN_REQUESTS throttle to the feed
     reader — each micro-batch's per-ticker fetch sleeps that long
-    before its request (rate-limited ingest, executor-side)."""
+    before its request (rate-limited ingest, executor-side). The feed
+    groups the tickers into at most `defaultParallelism` partitions, so
+    a trigger runs one fetch task per core, not one per ticker."""
     from ..sources.feed_datasource import FeedDataSource
 
-    try:
-        store.spark.dataSource.register(FeedDataSource)
-    except Exception:
-        pass  # already registered in this session
+    store.spark.dataSource.register(FeedDataSource)
     names = store.read("names")
     tickers = ",".join(r["ticker"] for r in names.select("ticker").collect())
     stream = (
@@ -309,6 +308,7 @@ def stream_update_history(
         .option("end", end.isoformat())
         .option("days_per_batch", str(days_per_batch))
         .option("wait_secs", str(wait_secs))
+        .option("numPartitions", str(store.spark.sparkContext.defaultParallelism))
         .load()
     )
     incoming = stream.join(

@@ -56,7 +56,9 @@ RUNTIME_CONFS: dict[str, str] = {
     # only enriches error messages with user call sites; production
     # batch jobs don't want to buy that per-call. Scale-independent:
     # this is driver-side constant cost, identical on local[32] and a
-    # 1000-executor cluster.
+    # 1000-executor cluster. Static on PySpark 4.1 (a live session
+    # refuses it, and tune() records that), so on a driver-owned session
+    # the module-cache sync in tune() is what turns the capture off.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
@@ -71,15 +73,20 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
     Every query entry point calls ``load()`` -> ``tune()``; the ~10
     conf.set py4j round trips are pure fixed overhead after the first
     call on a session, so mark the session object and skip thereafter
-    (a fresh session lacks the marker and gets tuned)."""
+    (a fresh session lacks the marker and gets tuned).
+
+    A conf this build refuses at runtime (builder-time only) is not
+    fatal: ``spark._finanalyzer_unapplied`` maps each one that could not
+    be applied to the error it raised (empty when all applied)."""
     n = shuffle_partitions or default_parallelism()
     if getattr(spark, "_finanalyzer_tuned", None) == n:
         return spark
+    unapplied: dict[str, str] = {}
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # non-runtime conf on this build — builder-time only
+        except Exception as exc:
+            unapplied[k] = f"{type(exc).__name__}: {exc}"
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     # PySpark caches the dataFrameDebugging conf in a module global at
     # the FIRST wrapped API call; a driver-owned session may have made
@@ -92,8 +99,11 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
         from pyspark.errors import utils as _pyspark_err_utils
 
         _pyspark_err_utils._enable_debugging_cache = False
-    except Exception:  # pragma: no cover - future pyspark refactor
-        pass
+    except Exception as exc:  # pragma: no cover - future pyspark refactor
+        unapplied["pyspark.errors.utils._enable_debugging_cache"] = (
+            f"{type(exc).__name__}: {exc}"
+        )
+    spark._finanalyzer_unapplied = unapplied
     spark._finanalyzer_tuned = n
     return spark
 

@@ -10,16 +10,22 @@ Python DataSource API (Spark 4+) so it composes as a reader:
          .option("start", "2026-08-01").option("end", "2026-08-05")
          .load()
 
-One InputPartition per ticker → each executor fetches its tickers
-independently (the reference's serial per-ticker loop with proxy
-rotation, dataAcquisition.py:36-51 / findatabase.py:128-133,
-parallelized). Rate limiting sits inside `read`, per partition: the
-`wait_secs` option sleeps before each feed request — the reference's
-WAIT_TIME_BETWEEN_REQUESTS (constants.py:2) applied per executor-side
-fetch, so a 1000-partition fan-out still honors the per-connection
-budget the upstream API expects (each partition is one connection).
-Filters on ticker/date could prune partitions at planning time; kept
-minimal here since the fixture feed is cheap.
+Tickers are grouped into at most `numPartitions` InputPartitions
+(the option name and meaning follow Spark's JDBC source); without the
+option every ticker gets its own partition. Each executor fetches its
+group's tickers one after another — the reference's serial per-ticker
+loop with proxy rotation (dataAcquisition.py:36-51 /
+findatabase.py:128-133), parallelized across groups. A caller sizes the
+option from its session (`stream_update_history` passes
+`defaultParallelism`): the DataSource API gives `partitions()` no
+session to ask, and one tiny Python task per ticker costs more in task
+launch than the fetch itself. Rate limiting sits inside `read`: the
+`wait_secs` option sleeps before each per-ticker feed request — the
+reference's WAIT_TIME_BETWEEN_REQUESTS (constants.py:2) applied per
+executor-side fetch, so however the tickers are grouped the per-request
+budget the upstream API expects is still honored. Filters on
+ticker/date could prune partitions at planning time; kept minimal here
+since the fixture feed is cheap.
 """
 
 from __future__ import annotations
@@ -40,6 +46,55 @@ FEED_SCHEMA = (
     "ticker string, date_value string, open double, high double, "
     "low double, close double"
 )
+
+
+def _feed_options(options: dict) -> tuple[list[str], str, str, float, int | None]:
+    """(tickers, start, end, wait_secs, numPartitions) — the options
+    both readers share."""
+    tickers = [t.strip() for t in options.get("tickers", "").split(",") if t.strip()]
+    if not tickers:
+        raise ValueError("fake_feed requires option 'tickers' (csv list)")
+    start, end = options.get("start"), options.get("end")
+    if not (start and end):
+        raise ValueError("fake_feed requires options 'start' and 'end'")
+    num_partitions = options.get("numPartitions")
+    if num_partitions is not None:
+        num_partitions = int(num_partitions)
+        if num_partitions < 1:
+            raise ValueError("fake_feed option 'numPartitions' must be >= 1")
+    return tickers, start, end, float(options.get("wait_secs", "0")), num_partitions
+
+
+def _plan_partitions(
+    tickers: list[str], num_partitions: int | None, lo: str, hi: str
+) -> list[InputPartition]:
+    """Contiguous, near-equal ticker groups over the inclusive day range
+    [lo, hi]: at most `num_partitions` of them, one per ticker when it
+    is None."""
+    n = len(tickers) if num_partitions is None else min(num_partitions, len(tickers))
+    bounds = [i * len(tickers) // n for i in range(n + 1)]
+    return [
+        InputPartition((tuple(tickers[a:b]), lo, hi))
+        for a, b in zip(bounds, bounds[1:])
+    ]
+
+
+def _read_partition(partition: InputPartition, wait_secs: float):
+    tickers, lo, hi = partition.value
+    lo, hi = dt.date.fromisoformat(lo), dt.date.fromisoformat(hi)
+    feed = FakeFeed()
+    for ticker in tickers:
+        if wait_secs:
+            time.sleep(wait_secs)  # reference inter-request throttle
+        for row in feed.history(ticker, lo, hi).itertuples(index=False):
+            yield (
+                ticker,
+                row.date_value,
+                float(row.open),
+                float(row.high),
+                float(row.low),
+                float(row.close),
+            )
 
 
 class FeedDataSource(DataSource):
@@ -69,38 +124,17 @@ class FeedDataSource(DataSource):
 
 class FeedReader(DataSourceReader):
     def __init__(self, options: dict):
-        tickers = options.get("tickers", "")
-        if not tickers:
-            raise ValueError("fake_feed requires option 'tickers' (csv list)")
-        self.tickers = [t.strip() for t in tickers.split(",") if t.strip()]
-        self.start = options.get("start")
-        self.end = options.get("end")
-        if not (self.start and self.end):
-            raise ValueError("fake_feed requires options 'start' and 'end'")
-        self.wait_secs = float(options.get("wait_secs", "0"))
+        self.tickers, self.start, self.end, self.wait_secs, self.num_partitions = (
+            _feed_options(options)
+        )
 
     def partitions(self) -> list[InputPartition]:
-        # one partition per ticker — fetch parallelism == ticker count
-        return [InputPartition(t) for t in self.tickers]
+        return _plan_partitions(
+            self.tickers, self.num_partitions, self.start, self.end
+        )
 
     def read(self, partition: InputPartition):
-        if self.wait_secs:
-            time.sleep(self.wait_secs)  # reference inter-request throttle
-        feed = FakeFeed()
-        hist = feed.history(
-            partition.value,
-            dt.date.fromisoformat(self.start),
-            dt.date.fromisoformat(self.end),
-        )
-        for row in hist.itertuples(index=False):
-            yield (
-                partition.value,
-                row.date_value,
-                float(row.open),
-                float(row.high),
-                float(row.low),
-                float(row.close),
-            )
+        return _read_partition(partition, self.wait_secs)
 
 
 class FeedStreamReader(DataSourceStreamReader):
@@ -112,8 +146,9 @@ class FeedStreamReader(DataSourceStreamReader):
     skipped days as processed — data loss): a driver-side cursor
     advances at most `days_per_batch` days per trigger, never past
     `end` — `maxFilesPerTrigger`'s analog. `partitions(start, end)`
-    covers exactly [start, end) with one partition per ticker, so the
-    fetch fans out across executors like the batch reader. The engine's
+    covers exactly [start, end) with the batch reader's ticker grouping
+    (at most `numPartitions` partitions, one per ticker without it), so
+    the fetch fans out across executors the same way. The engine's
     checkpointed offset log replays any batch deterministically — the
     FakeFeed is a pure function of (ticker, day), which is what makes
     replay exactly-once all the way to the sink. After a restart the
@@ -121,19 +156,14 @@ class FeedStreamReader(DataSourceStreamReader):
     loss) until it catches up via the max() in _bump."""
 
     def __init__(self, options: dict):
-        tickers = options.get("tickers", "")
-        if not tickers:
-            raise ValueError("fake_feed requires option 'tickers' (csv list)")
-        self.tickers = [t.strip() for t in tickers.split(",") if t.strip()]
-        start, end = options.get("start"), options.get("end")
-        if not (start and end):
-            raise ValueError("fake_feed requires options 'start' and 'end'")
+        self.tickers, start, end, self.wait_secs, self.num_partitions = (
+            _feed_options(options)
+        )
         self.start = dt.date.fromisoformat(start)
         self.end = dt.date.fromisoformat(end)
         # clamp: 0/negative would pin latestOffset forever (a stream
         # that never makes progress and never finishes)
         self.days_per_batch = max(1, int(options.get("days_per_batch", "1")))
-        self.wait_secs = float(options.get("wait_secs", "0"))
         self._cursor: dt.date | None = None
 
     def _bump(self, day: dt.date) -> None:
@@ -159,25 +189,15 @@ class FeedStreamReader(DataSourceStreamReader):
         self._bump(hi)
         if hi <= lo:
             return []
-        span = (lo.isoformat(), (hi - dt.timedelta(days=1)).isoformat())
-        return [InputPartition((t, *span)) for t in self.tickers]
+        return _plan_partitions(
+            self.tickers,
+            self.num_partitions,
+            lo.isoformat(),
+            (hi - dt.timedelta(days=1)).isoformat(),
+        )
 
     def read(self, partition: InputPartition):
-        if self.wait_secs:
-            time.sleep(self.wait_secs)  # reference inter-request throttle
-        ticker, lo, hi = partition.value
-        hist = FakeFeed().history(
-            ticker, dt.date.fromisoformat(lo), dt.date.fromisoformat(hi)
-        )
-        for row in hist.itertuples(index=False):
-            yield (
-                ticker,
-                row.date_value,
-                float(row.open),
-                float(row.high),
-                float(row.low),
-                float(row.close),
-            )
+        return _read_partition(partition, self.wait_secs)
 
     def commit(self, end: dict) -> None:
         # offsets live in the engine's checkpoint; the feed is

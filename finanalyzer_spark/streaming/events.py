@@ -226,6 +226,24 @@ def streaming_enrich_with_dim(
     ).drop(on_right)
 
 
+def _read_once(merge):
+    """foreachBatch writer around `merge(batch, batch_id)` that persists
+    the micro-batch for the merge's duration. A keyed merge uses the
+    incoming rows twice (left-anti join + union), and each use of an
+    unpersisted micro-batch re-runs the source — twice the fetch, and
+    twice the rows in the query's `numInputRows`. The cache is dropped
+    after every trigger, so it never outlives its batch."""
+
+    def write(batch: DataFrame, batch_id: int) -> None:
+        batch.persist()
+        try:
+            merge(batch, batch_id)
+        finally:
+            batch.unpersist()
+
+    return write
+
+
 def foreach_batch_merge(target_dir: str, keys: list[str]):
     """ForeachBatch sink: idempotent keyed upsert of each micro-batch
     into a parquet target (read → left-anti on keys → union → swap).
@@ -240,10 +258,11 @@ def foreach_batch_merge(target_dir: str, keys: list[str]):
     """
     from ..pipeline.merge import merge_into
 
-    def write(batch: DataFrame, batch_id: int) -> None:
-        merge_into(batch.sparkSession, target_dir, batch, keys)
-
-    return write
+    return _read_once(
+        lambda batch, batch_id: merge_into(
+            batch.sparkSession, target_dir, batch, keys
+        )
+    )
 
 
 def foreach_batch_versioned_merge(table, keys: list[str]):
@@ -254,13 +273,11 @@ def foreach_batch_versioned_merge(table, keys: list[str]):
     vacuum, and replayed batches produce identical row sets (as fresh
     versions). The upgrade path from foreach_batch_merge when
     downstream consumers read WHILE the stream runs."""
-
-    def write(batch: DataFrame, batch_id: int) -> None:
-        # batch_id is the engine's monotone epoch — passing it as the
-        # txn id makes redelivered batches version-level no-ops
-        table.merge(batch, keys, txn_id=batch_id)
-
-    return write
+    # batch_id is the engine's monotone epoch — passing it as the txn
+    # id makes redelivered batches version-level no-ops
+    return _read_once(
+        lambda batch, batch_id: table.merge(batch, keys, txn_id=batch_id)
+    )
 
 
 def streaming_view_click_join(

@@ -69,20 +69,32 @@ def test_fetch_info_null_to_zero(spark):
         assert row[c] == pytest.approx(provided[c])
 
 
-def test_feed_datasource_matches_mapinpandas_fetcher(spark):
+@pytest.mark.parametrize(
+    "num_partitions, want_partitions",
+    [
+        pytest.param(None, 2, id="one_per_ticker"),  # option absent
+        pytest.param(1, 1, id="one_partition"),  # both tickers in one
+    ],
+)
+def test_feed_datasource_matches_mapinpandas_fetcher(
+    spark, num_partitions, want_partitions
+):
     """The DataSource-API reader and the mapInPandas fetcher must
-    produce identical rows for the same (tickers, range)."""
+    produce identical rows for the same (tickers, range), however the
+    tickers are grouped into partitions."""
     from finanalyzer_spark.sources.feed_datasource import FeedDataSource
 
     spark.dataSource.register(FeedDataSource)
-    via_ds = (
+    reader = (
         spark.read.format("fake_feed")
         .option("tickers", "AAPL,MSFT")
         .option("start", "2026-08-01")
         .option("end", "2026-08-05")
-        .load()
     )
-    assert via_ds.rdd.getNumPartitions() == 2  # one per ticker
+    if num_partitions is not None:
+        reader = reader.option("numPartitions", str(num_partitions))
+    via_ds = reader.load()
+    assert via_ds.rdd.getNumPartitions() == want_partitions
     tasks = spark.createDataFrame(
         [("AAPL", "2026-08-01", "2026-08-05"), ("MSFT", "2026-08-01", "2026-08-05")],
         "ticker string, start_date string, end_date string",

@@ -175,6 +175,41 @@ def test_foreach_batch_merge_idempotent(spark, tmp_path):
     assert merged.count() == merged.select("event_id").distinct().count() == distinct_ids
 
 
+def test_foreach_batch_merge_reads_each_micro_batch_once(spark, tmp_path):
+    """The plain-parquet twin of the versioned merge sink test: the
+    feed stream through foreach_batch_merge lands exactly the batch
+    reader's rows, and the query's progress counts every delivered row
+    once although the merge uses the batch twice (anti-join + union)."""
+    from finanalyzer_spark.sources.feed_datasource import FeedDataSource
+    from finanalyzer_spark.streaming.events import foreach_batch_merge
+
+    spark.dataSource.register(FeedDataSource)
+    target = str(tmp_path / "feed_merged")
+    opts = {"tickers": "AAPL,MSFT", "start": "2026-08-01", "end": "2026-08-04"}
+    q = (
+        spark.readStream.format("fake_feed")
+        .options(**opts, days_per_batch="2")
+        .load()
+        .writeStream.foreachBatch(
+            foreach_batch_merge(target, ["ticker", "date_value"])
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        input_rows = sum(p["numInputRows"] for p in q.recentProgress)
+    finally:
+        q.stop()
+
+    assert input_rows == 2 * 4  # tickers x days
+    want = spark.read.format("fake_feed").options(**opts).load()
+    got = spark.read.parquet(target)
+    assert got.count() == want.count() == 2 * 4
+    assert got.exceptAll(want).count() == 0
+
+
 def test_transform_with_state_matches_batch(spark, events_stream):
     """transformWithStateInPandas (typed-state successor API): final
     per-user totals must equal the batch aggregation, like the

@@ -208,7 +208,9 @@ def test_streaming_versioned_merge_sink(spark, tmp_path):
     """The feed stream writing through the MVCC merge sink: one
     snapshot per data-bearing trigger, the final version holds exactly
     the batch reader's rows, and every intermediate snapshot remains
-    time-travelable — a reader pinned mid-stream is never disturbed."""
+    time-travelable — a reader pinned mid-stream is never disturbed.
+    The sink reads each micro-batch from the source once: the query's
+    progress counts every delivered row exactly once."""
     from finanalyzer_spark.sources.feed_datasource import FeedDataSource
     from finanalyzer_spark.streaming.events import (
         foreach_batch_versioned_merge,
@@ -235,9 +237,11 @@ def test_streaming_versioned_merge_sink(spark, tmp_path):
     )
     try:
         q.processAllAvailable()
+        input_rows = sum(p["numInputRows"] for p in q.recentProgress)
     finally:
         q.stop()
 
+    assert input_rows == 2 * 4  # tickers x days, not once per use
     # 4 days at 2/trigger -> 2 committed snapshots
     assert t.current_version() == 2
     want = spark.read.format("fake_feed").options(**opts).load()
